@@ -40,12 +40,17 @@ final case class KMeansResult(
   *    iteration (KMeans.java:167-171; Doc CC pdf §2.0.1);
   *  - stop when Σ‖Δcᵢ‖ < eps (KMeans.java:174-179).
   *
-  * Scale posture vs the reference: the input is cached once and each
-  * round is ONE job (narrow assign → partial agg → k-row shuffle → final
-  * agg → collect of k·(d+1) values). The reference re-reads the input
-  * from HDFS and launches a fresh MR job every round (~22 s fixed
-  * overhead per its own §3 evaluation); on a 1000-executor cluster this
-  * loop's per-round cost is one shuffle of k·d·#partitions doubles.
+  * Scale posture vs the reference: the input's vectors are cached once
+  * (a [[LloydKernel]]) and each round is ONE shuffle-free job — every
+  * task assigns its partition's vectors and sums per-cluster partials,
+  * and the driver merges the #partitions · k·(d+1) partial values in
+  * partition order. The reference re-reads the input from HDFS and
+  * launches a fresh MR job every round (~22 s fixed overhead per its own
+  * §3 evaluation); on a 1000-executor cluster this loop's per-round cost
+  * is one task per partition plus that collect. For a points file the
+  * partitions are the source's splits, about one per core by default
+  * (see [[graft.sources.PointsDataSource]]), like the reference's one
+  * mapper per input split.
   */
 object KMeansRunner {
 

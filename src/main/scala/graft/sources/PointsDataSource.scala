@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -9,17 +10,19 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 table for the reference's point text format — one
   * `<x1, x2, …, xd>` vector per line (parser contract of
@@ -34,12 +37,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * exactly like the built-in text source, and column pruning reaches
   * the reader — a `count(*)` never parses a double
   * (SupportsPushDownRequiredColumns). Options:
-  * `splitSizeBytes` (default 128 MiB) controls range size.
+  * `splitSizeBytes` fixes the range size; without it ranges follow the
+  * built-in file sources' rule (`FilePartition.maxSplitBytes`):
+  * min(`spark.sql.files.maxPartitionBytes`, max(`openCostInBytes`,
+  * Σ(len + openCost) / `spark.sql.files.minPartitionNum`, which
+  * defaults to the default parallelism)), so one big file becomes
+  * about one range per core.
   *
   * `df.write.format("points").mode("overwrite"|"append").save(path)`
   * is the matching SINK (see [[PointsWriteBuilder]]): task-atomic
   * rename-on-commit files, truncate-on-overwrite, value-exact
   * round-trip through the scan.
+  *
+  * Both directions ship the session's Hadoop conf (spark.hadoop.* —
+  * fs.defaultFS, object-store credentials) to tasks as ONE broadcast
+  * `SerializableConfiguration` per scan or write, as the built-in file
+  * sources do: a task then resolves the same filesystem the driver
+  * planned against, and the ~100 KB conf is not re-serialized into
+  * every task binary (nor into the lineage of an RDD cached over it).
   */
 class PointsDataSource extends TableProvider with DataSourceRegister {
 
@@ -55,38 +70,16 @@ class PointsDataSource extends TableProvider with DataSourceRegister {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "points source requires a single `path` (spark.read.format(\"points\").load(path))"))
-    val splitSize = Option(properties.get("splitSizeBytes"))
-      .map(_.toLong).getOrElse(PointsTable.DefaultSplitSize)
-    new PointsTable(path, splitSize)
+    new PointsTable(path, Option(properties.get("splitSizeBytes")).map(_.toLong))
   }
 }
 
 object PointsTable {
   val Schema: StructType =
     StructType(Seq(StructField("point", ArrayType(DoubleType, false), false)))
-  val DefaultSplitSize: Long = 128L * 1024 * 1024
 }
 
-/** Hadoop Configuration is not java.io.Serializable; ship the SESSION
-  * conf (spark.hadoop.* — fs.defaultFS, object-store credentials) to
-  * executors via Hadoop's own write/readFields, so task-side
-  * FileSystem.get resolves the SAME filesystem the driver planned
-  * against. A bare `new Configuration()` on the executor silently
-  * drops every session setting. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-class PointsTable(path: String, splitSize: Long)
+class PointsTable(path: String, splitSize: Option[Long])
   extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"points($path)"
@@ -95,22 +88,20 @@ class PointsTable(path: String, splitSize: Long)
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE).asJava
 
-  // the Hadoop conf is captured HERE — newScanBuilder/newWriteBuilder
-  // run on the thread of the session that issued the query, so a
-  // multi-session application resolves fs settings/credentials from
-  // the CORRECT session instead of whatever SparkSession.active holds
-  // at job-commit time
+  // the session (and its Hadoop conf) is captured HERE —
+  // newScanBuilder/newWriteBuilder run on the thread of the session
+  // that issued the query, so a multi-session application resolves fs
+  // settings/credentials and the split rule's confs from the CORRECT
+  // session instead of whatever SparkSession.active holds at job time
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PointsScanBuilder(path, splitSize, new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf()))
+    new PointsScanBuilder(path, splitSize, SparkSession.active)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new PointsWriteBuilder(path, info.schema(), new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf()))
+    new PointsWriteBuilder(path, info.schema(), SparkSession.active)
 }
 
-class PointsScanBuilder(path: String, splitSize: Long,
-                        conf: SerializableHadoopConf)
+class PointsScanBuilder(path: String, splitSize: Option[Long],
+                        session: SparkSession)
   extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = PointsTable.Schema
@@ -118,17 +109,20 @@ class PointsScanBuilder(path: String, splitSize: Long,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new PointsScan(path, splitSize, required, conf)
+  override def build(): Scan = new PointsScan(path, splitSize, required, session)
 }
 
-class PointsScan(path: String, splitSize: Long, required: StructType,
-                 conf: SerializableHadoopConf)
+class PointsScan(path: String, splitSize: Option[Long], required: StructType,
+                 session: SparkSession)
   extends Scan with Batch {
+
+  private val conf = session.sessionState.newHadoopConf()
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"PointsScan path=$path splitSize=$splitSize cols=${required.fieldNames.mkString(",")}"
+    s"PointsScan path=$path splitSize=${splitSize.getOrElse("auto")} " +
+      s"cols=${required.fieldNames.mkString(",")}"
 
   /** Driver-side listing: glob/dir expansion, then byte-range splits.
     * Line alignment is resolved at READ time by the Hadoop text-split
@@ -136,7 +130,7 @@ class PointsScan(path: String, splitSize: Long, required: StructType,
     * file contents — O(#files) driver work, like the built-in sources. */
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     val matched: Array[FileStatus] =
       Option(fs.globStatus(p)).getOrElse(Array.empty)
     val files = matched.flatMap { st =>
@@ -146,29 +140,31 @@ class PointsScan(path: String, splitSize: Long, required: StructType,
       val n = st.getPath.getName
       st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
     }
+    val rangeSize = splitSize.getOrElse(FilePartition.maxSplitBytes(
+      session, Seq(PartitionDirectory(InternalRow.empty, files))))
     files.flatMap { st =>
       val len = st.getLen
       val uri = st.getPath.toUri.toString
-      (0L until len by splitSize).map { start =>
-        PointsInputPartition(uri, start, math.min(splitSize, len - start))
+      (0L until len by rangeSize).map { start =>
+        PointsInputPartition(uri, start, math.min(rangeSize, len - start))
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     PointsReaderFactory(parsePoint = required.fieldNames.contains("point"),
-      conf = conf)
+      conf = session.sparkContext.broadcast(new SerializableConfiguration(conf)))
 }
 
 final case class PointsInputPartition(path: String, start: Long, length: Long)
   extends InputPartition
 
 final case class PointsReaderFactory(parsePoint: Boolean,
-                                     conf: SerializableHadoopConf)
+                                     conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PointsPartitionReader(
-      partition.asInstanceOf[PointsInputPartition], parsePoint, conf)
+      partition.asInstanceOf[PointsInputPartition], parsePoint, conf.value.value)
 }
 
 /** Range reader with the Hadoop text-split ownership contract: a split
@@ -178,16 +174,17 @@ final case class PointsReaderFactory(parsePoint: Boolean,
   * which reads past its own end to finish it); it then emits lines
   * while their start offset is < end. */
 class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
-                            conf: SerializableHadoopConf)
+                            conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val end = split.start + split.length
   private val text = new Text()
-  private var row: InternalRow = _
+  // one row, refilled per line: the scan's projection copies it out
+  private val row = new GenericInternalRow(if (parsePoint) 1 else 0)
 
   private val stream = {
     val p = new Path(split.path)
-    p.getFileSystem(conf.value).open(p)
+    p.getFileSystem(conf).open(p)
   }
   private var pos: Long = split.start
   // ONE LineReader for skip + reads: it buffers ahead, so a second
@@ -208,13 +205,10 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
       val consumed = lines.readLine(text)
       if (consumed == 0) return false
       pos += consumed
-      val s = text.toString.trim
-      if (s.nonEmpty) {
-        row = if (parsePoint) {
-          val body = s.replaceAll("[<>]", "")
-          val vals = body.split(",\\s*").map(java.lang.Double.parseDouble)
-          new GenericInternalRow(Array[Any](new GenericArrayData(vals)))
-        } else new GenericInternalRow(0) // count(*): no parse
+      if (!PointsLine.isBlank(text)) {
+        // a count(*) scan does not parse the line
+        if (parsePoint)
+          row.update(0, UnsafeArrayData.fromPrimitiveArray(PointsLine.parse(text)))
         return true
       }
     }
@@ -223,6 +217,70 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
 
   override def get(): InternalRow = row
   override def close(): Unit = stream.close()
+}
+
+/** One line of the points format → its vector, without regexes.
+  *
+  * [[reference]] is the format's defining routine (trim, drop every
+  * `<`/`>`, split on `,\s*`, `Double.parseDouble` per token). The fast
+  * path trims the same bytes, drops one leading `<` and one trailing
+  * `>`, cuts the rest at its commas and hands each token to the same
+  * `parseDouble`, which trims the whitespace the regex split would have
+  * eaten — so its doubles are bit-identical. `parseDouble` rejects any
+  * token the regex routine would have treated differently: an empty or
+  * blank one (a trailing comma), one holding a stray bracket, one with
+  * a non-ASCII byte. Such a line goes to [[reference]], so results and
+  * exceptions are exactly the reference's. */
+private[graft] object PointsLine {
+
+  /** What `String.trim` strips: every ASCII char ≤ ' ' (bytes ≥ 0x80
+    * are negative here and belong to non-ASCII chars, never trimmed). */
+  private def isTrimmed(b: Byte): Boolean = b >= 0 && b <= ' '
+
+  /** The line is empty after `trim` (skipped by the reader). */
+  def isBlank(line: Text): Boolean = {
+    val b = line.getBytes
+    var i = 0
+    val n = line.getLength
+    while (i < n && isTrimmed(b(i))) i += 1
+    i == n
+  }
+
+  /** The vector of a non-blank line. */
+  def parse(line: Text): Array[Double] = {
+    val v = tokenize(line.getBytes, line.getLength)
+    if (v != null) v else reference(line.toString)
+  }
+
+  private def reference(line: String): Array[Double] =
+    line.trim.replaceAll("[<>]", "").split(",\\s*")
+      .map(java.lang.Double.parseDouble)
+
+  /** The fast path, or null when a token does not parse. */
+  private def tokenize(b: Array[Byte], n: Int): Array[Double] = {
+    var lo = 0
+    var hi = n
+    while (lo < hi && isTrimmed(b(lo))) lo += 1
+    while (hi > lo && isTrimmed(b(hi - 1))) hi -= 1
+    if (lo < hi && b(lo) == '<') lo += 1
+    if (lo < hi && b(hi - 1) == '>') hi -= 1
+    var commas = 0
+    var i = lo
+    while (i < hi) { if (b(i) == ',') commas += 1; i += 1 }
+    val out = new Array[Double](commas + 1)
+    var start = lo
+    var t = 0
+    while (t <= commas) {
+      var stop = start
+      while (stop < hi && b(stop) != ',') stop += 1
+      try out(t) = java.lang.Double.parseDouble(
+        new String(b, start, stop - start, StandardCharsets.ISO_8859_1))
+      catch { case _: NumberFormatException => return null }
+      start = stop + 1
+      t += 1
+    }
+    out
+  }
 }
 
 // ---------------------------------------------------------------------
@@ -239,26 +297,28 @@ class PointsPartitionReader(split: PointsInputPartition, parsePoint: Boolean,
 // ---------------------------------------------------------------------
 
 class PointsWriteBuilder(path: String, schema: StructType,
-                         conf: SerializableHadoopConf)
+                         session: SparkSession)
   extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new PointsWrite(path, schema, doTruncate, conf)
+  override def build(): Write = new PointsWrite(path, schema, doTruncate, session)
 }
 
 class PointsWrite(path: String, schema: StructType, truncate: Boolean,
-                  conf: SerializableHadoopConf)
+                  session: SparkSession)
   extends Write {
   require(schema.fields.length == 1 && (schema.fields(0).dataType match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }), s"points sink expects a single array<double> column, got: $schema")
 
-  override def toBatch: BatchWrite = new PointsBatchWrite(path, truncate, conf)
+  override def toBatch: BatchWrite = new PointsBatchWrite(path, truncate, session)
 }
 
-class PointsBatchWrite(path: String, truncate: Boolean,
-                       conf: SerializableHadoopConf) extends BatchWrite {
+class PointsBatchWrite(path: String, truncate: Boolean, session: SparkSession)
+  extends BatchWrite {
+
+  private val conf = session.sessionState.newHadoopConf()
 
   /** Per-JOB id baked into every file name: taskId/partitionId are only
     * unique within one Spark application, so an append from a LATER
@@ -271,10 +331,11 @@ class PointsBatchWrite(path: String, truncate: Boolean,
   /** Driver-side: clear on truncate, ensure the directory exists. */
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    PointsWriterFactory(path, jobId, conf)
+    PointsWriterFactory(path, jobId,
+      session.sparkContext.broadcast(new SerializableConfiguration(conf)))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -282,7 +343,7 @@ class PointsBatchWrite(path: String, truncate: Boolean,
     // (fs.defaultFS, object-store credentials) must resolve the marker
     // on the SAME filesystem as the data files
     val p = new Path(path, "_SUCCESS")
-    val fs = p.getFileSystem(conf.value)
+    val fs = p.getFileSystem(conf)
     fs.create(p, true).close()
   }
 
@@ -292,23 +353,23 @@ class PointsBatchWrite(path: String, truncate: Boolean,
 }
 
 final case class PointsWriterFactory(path: String, jobId: String,
-                                     conf: SerializableHadoopConf)
+                                     conf: Broadcast[SerializableConfiguration])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PointsDataWriter(path, jobId, partitionId, taskId, conf)
+    new PointsDataWriter(path, jobId, partitionId, taskId, conf.value.value)
 }
 
 final case class PointsCommit(file: String) extends WriterCommitMessage
 
 class PointsDataWriter(dir: String, jobId: String, partitionId: Int,
-                       taskId: Long, conf: SerializableHadoopConf)
+                       taskId: Long, conf: Configuration)
   extends DataWriter[InternalRow] {
 
   private val finalPath =
     new Path(dir, f"part-$partitionId%05d-$taskId-$jobId")
   private val tmpPath =
     new Path(dir, f".part-$partitionId%05d-$taskId-$jobId.inprogress")
-  private val fs = tmpPath.getFileSystem(conf.value)
+  private val fs = tmpPath.getFileSystem(conf)
   private val writer = new java.io.BufferedWriter(
     new java.io.OutputStreamWriter(fs.create(tmpPath, true),
       java.nio.charset.StandardCharsets.UTF_8))

@@ -1,8 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
-import graft.kmeans.{KMeansOps, KMeansRunner, PointsIO}
+import graft.kmeans.{KMeansOps, KMeansRunner, LloydKernel, PointsIO}
 
 /** Reference-semantics unit tests for the k-means kernel (SURVEY.md §5):
   * strict-< argmin tie-break, mean finalization, empty-cluster re-init,
@@ -238,6 +240,49 @@ class KMeansSpec extends SparkSessionSpec {
       PointsIO.readPoints(spark, s"$tmp/bad.txt").collect()
     }
     assert(thrown.getMessage != null)
+  }
+
+  test("KMeansRunner.run on a points file is invariant to its split plan") {
+    val rnd = new scala.util.Random(7)
+    val centres = Array.fill(3, 4)(rnd.nextDouble() * 20 - 10)
+    val lines = (0 until 2400).map { i =>
+      centres(i % 3).map(c => math.rint((c + rnd.nextGaussian()) * 1e6) / 1e6)
+        .mkString("<", ", ", ">")
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("split_inv")
+    val file = tmp.resolve("pts.txt")
+    java.nio.file.Files.write(file, lines.asJava)
+    val len = java.nio.file.Files.size(file)
+    // a small open cost makes the default rule cut this test-sized
+    // file as it cuts a big one: about one range per core
+    def fit(split: Option[Long]) =
+      withConf("spark.sql.files.openCostInBytes", "64") {
+        val df = split.fold(spark.read.format("points"))(s =>
+          spark.read.format("points").option("splitSizeBytes", s.toString))
+          .load(file.toString)
+        val parts = df.rdd.getNumPartitions
+        val sample = KMeansRunner.sampleCentroids(df, "point", 3, 11L)
+        val res = KMeansRunner.run(df, "point", 3, 10, 0.0, 11L)
+        val sizes = new LloydKernel(df, "point", cache = false)
+          .round(res.centroids).sortBy(_._1).map(_._3)
+        (parts, sample, res, sizes)
+      }
+    val one = fit(Some(len))
+    val three = fit(Some((len + 2) / 3))
+    val auto = fit(None)
+    assert(one._1 == 1 && three._1 == 3 && auto._1 > 1,
+      s"partitions ${one._1}, ${three._1}, ${auto._1}")
+    def bits(m: Array[Array[Double]]) =
+      m.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    Seq(three, auto).foreach { case (parts, sample, res, sizes) =>
+      assert(bits(sample) == bits(one._2), s"sample differs at $parts splits")
+      assert(sizes.toSeq == one._4.toSeq, s"sizes differ at $parts splits")
+      assert(res.iterations == one._3.iterations && res.reinitCount == one._3.reinitCount)
+      res.centroids.zip(one._3.centroids).foreach { case (a, b) =>
+        a.zip(b).foreach { case (x, y) => assert(math.abs(x - y) < 1e-9, s"$parts splits") }
+      }
+    }
+    assert(one._4.sum == lines.size)
   }
 
   test("runReplayable is layout-independent and emits 6dp-quantized centroids") {

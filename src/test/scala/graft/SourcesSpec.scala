@@ -43,6 +43,43 @@ class SourcesSpec extends SparkSessionSpec {
     assert(sortedVecs(df) == sortedVecs(PointsIO.readPointsText(spark, path)))
   }
 
+  /** A small open cost makes the default split rule cut this test-sized
+    * file as it cuts a big one: about one range per core. */
+  private def withSmallOpenCost[A](body: => A): A =
+    withConf("spark.sql.files.openCostInBytes", "64")(body)
+
+  test("no splitSizeBytes: ranges follow maxSplitBytes, >1 and <= defaultParallelism") {
+    withSmallOpenCost {
+      val df = spark.read.format("points").load(path)
+      val n = df.rdd.getNumPartitions
+      assert(n > 1 && n <= spark.sparkContext.defaultParallelism, s"$n partitions")
+      assert(sortedVecs(df) == sortedVecs(PointsIO.readPointsText(spark, path)))
+    }
+  }
+
+  test("an explicit splitSizeBytes is honoured exactly over the default rule") {
+    val len = new java.io.File(path).length
+    withSmallOpenCost {
+      Seq(1000L, 4096L, len).foreach { split =>
+        val df = spark.read.format("points")
+          .option("splitSizeBytes", split.toString).load(path)
+        assert(df.rdd.getNumPartitions == (len + split - 1) / split, s"split=$split")
+      }
+    }
+  }
+
+  test("scan lineage stays small: the Hadoop conf ships once, as a broadcast") {
+    // the closure serializer ships this RDD (and every RDD built over
+    // it, e.g. LloydKernel's cached vectors) inside each task binary
+    val rdd = org.apache.spark.sql.GraftSqlBridge.internalRdd(
+      PointsIO.readPoints(spark, path))
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(rdd)
+    out.close()
+    assert(bytes.size < 16 * 1024, s"${bytes.size} bytes of lineage")
+  }
+
   test("count(*) prunes the parse and still counts every line") {
     assert(spark.read.format("points").load(path).count() == 500)
     assert(spark.read.format("points").option("splitSizeBytes", "64")

@@ -17,4 +17,12 @@ trait SparkSessionSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the session conf `key` set to `value`, then
+    * restores it (or unsets it when it was unset). */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
